@@ -252,7 +252,7 @@ def _dim_sums(inverted: DataFrame) -> DataFrame:
     cannot make kmeans_two_iter internally inconsistent.
 
     The posexplode + (list_id, pos)-keyed hash aggregate is the
-    MEASURED winner (r15 A/B, tools/ab_interleaved.py dim_wide,
+    MEASURED winner (r15 interleaved A/B,
     bench_baselines/ab_dim_wide_r15.jsonl): a value-identical wide
     form — one groupBy(list_id) carrying 64 decimal-sum + 64 count
     buffers, unpivoted with stack, saving one exchange — ran **2×

@@ -30,8 +30,13 @@ from pyspark.sql.types import (
 from automatic_etl_spark.plans.registry import register
 from automatic_etl_spark.plans.relational import qround
 from automatic_etl_spark.scratch import scratch_dir
+from automatic_etl_spark.session import scoped_conf
 from automatic_etl_spark.sources.parquet import table
 from automatic_etl_spark.streaming import cdc
+
+# Every stream plan pins its state/shuffle partition count for the
+# stream's lifetime only (session.scoped_conf).
+_SHUFFLE = "spark.sql.shuffle.partitions"
 
 
 def stage_stream_dir(
@@ -150,44 +155,38 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # low-volume stream must not pay the full CPU budget's worth.
     from automatic_etl_spark.session import stream_state_partitions
 
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_state_partitions(path))
-    )
-    # Staged files are normalized (ts is plain TIMESTAMP) regardless of
-    # the fixture's on-disk encoding.
-    stream = spark.readStream.schema(spark.read.parquet(path).schema).parquet(path)
-    agg = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("cnt"),
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("value_total"),
+    with scoped_conf(spark, {_SHUFFLE: str(stream_state_partitions(path))}):
+        # Staged files are normalized (ts is plain TIMESTAMP) regardless of
+        # the fixture's on-disk encoding.
+        stream = spark.readStream.schema(
+            spark.read.parquet(path).schema
+        ).parquet(path)
+        agg = (
+            stream.withWatermark("ts", "1 hour")
+            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+            .agg(
+                F.count("*").alias("cnt"),
+                F.sum(F.col("value").cast("decimal(18,2)"))
+                .cast("double")
+                .alias("value_total"),
+            )
+            .select(
+                F.col("w.start").alias("window_start"),
+                "event_type",
+                "cnt",
+                "value_total",
+            )
         )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "cnt",
-            "value_total",
+        name = f"stream_hourly_{uuid.uuid4().hex[:8]}"
+        query = (
+            agg.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete")
+            .option("checkpointLocation", scratch_dir("cdc_ckpt"))
+            .trigger(availableNow=True)
+            .start()
         )
-    )
-    name = f"stream_hourly_{uuid.uuid4().hex[:8]}"
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", scratch_dir("cdc_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
         query.awaitTermination()
-    finally:
-        # restore even when the stream raises — a failed stream must
-        # not leak the pinned partition count into later queries
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
     return spark.table(name)
 
 
@@ -218,31 +217,27 @@ def streaming_replay_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from automatic_etl_spark.session import stream_state_partitions
 
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_state_partitions(data_dir))
-    )
-    stream = (
-        spark.readStream.schema("event_id long, user_id long, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(data_dir)
-    )
-    name = f"replay_dedup_{uuid.uuid4().hex[:8]}"
-    query = (
-        stream.dropDuplicates(["event_id"])
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir("replay_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
+    with scoped_conf(
+        spark, {_SHUFFLE: str(stream_state_partitions(data_dir))}
+    ):
+        stream = (
+            spark.readStream.schema(
+                "event_id long, user_id long, event_type string"
+            )
+            .option("maxFilesPerTrigger", 1)
+            .parquet(data_dir)
+        )
+        name = f"replay_dedup_{uuid.uuid4().hex[:8]}"
+        query = (
+            stream.dropDuplicates(["event_id"])
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .option("checkpointLocation", scratch_dir("replay_ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
         query.awaitTermination()
-    finally:
-        # restore even when the stream raises — a failed stream must
-        # not leak the pinned partition count into later queries
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
     return (
         spark.table(name)
         .groupBy("event_type")
@@ -279,34 +274,28 @@ def streaming_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     data_dir = os.path.join(stage, "data")
     doubled.coalesce(2).write.mode("overwrite").parquet(data_dir)
 
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_state_partitions(data_dir))
-    )
-    stream = (
-        spark.readStream.schema(
-            "event_id long, user_id long, event_type string, ts timestamp"
+    with scoped_conf(
+        spark, {_SHUFFLE: str(stream_state_partitions(data_dir))}
+    ):
+        stream = (
+            spark.readStream.schema(
+                "event_id long, user_id long, event_type string, ts timestamp"
+            )
+            .option("maxFilesPerTrigger", 1)
+            .parquet(data_dir)
         )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(data_dir)
-    )
-    name = f"wm_dedup_{uuid.uuid4().hex[:8]}"
-    query = (
-        stream.withWatermark("ts", "60 days")
-        .dropDuplicatesWithinWatermark(["event_id"])
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir("wm_dedup_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
+        name = f"wm_dedup_{uuid.uuid4().hex[:8]}"
+        query = (
+            stream.withWatermark("ts", "60 days")
+            .dropDuplicatesWithinWatermark(["event_id"])
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .option("checkpointLocation", scratch_dir("wm_dedup_ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
         query.awaitTermination()
-    finally:
-        # restore even when the stream raises — a failed stream must
-        # not leak the pinned partition count into later queries
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
     return (
         spark.table(name)
         .groupBy("event_type")
@@ -346,34 +335,28 @@ def stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     data_dir = os.path.join(stage, "data")
     events.coalesce(2).write.mode("overwrite").parquet(data_dir)
 
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     # Deliberately CPU-sized, NOT volume-sized (stream_state_partitions):
     # applyInPandasWithState runs every group's pandas code in a Python
     # worker, so the partition count is the Python-stage parallelism and
     # per-partition state commits are noise next to it — the r7 A/B
     # measured 2.8-5.1 s at 32 partitions vs 5.3-7.6 s at 1.
-    spark.conf.set("spark.sql.shuffle.partitions", str(default_parallelism()))
-    stream = (
-        spark.readStream.schema("user_id long, cents long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(data_dir)
-    )
-    name = f"stateful_totals_{uuid.uuid4().hex[:8]}"
-    query = (
-        running_user_totals(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", scratch_dir("stateful_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
+    with scoped_conf(spark, {_SHUFFLE: str(default_parallelism())}):
+        stream = (
+            spark.readStream.schema("user_id long, cents long")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(data_dir)
+        )
+        name = f"stateful_totals_{uuid.uuid4().hex[:8]}"
+        query = (
+            running_user_totals(stream)
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode("update")
+            .option("checkpointLocation", scratch_dir("stateful_ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
         query.awaitTermination()
-    finally:
-        # restore even when the stream raises — a failed stream must
-        # not leak the pinned partition count into later queries
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
 
     from pyspark.sql import Window
 
@@ -465,52 +448,49 @@ def stream_stream_join_with_progress(
     sign_dir = os.path.join(both_dir, "event_type=signup")
     purch_dir = os.path.join(both_dir, "event_type=purchase")
 
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     # 4 join state stores × partitions × batches commits: size the
     # partition count to the staged volume, not the CPU budget.
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(stream_state_partitions(sign_dir, purch_dir)),
-    )
-    signups = (
-        spark.readStream.schema("user_id long, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(sign_dir)
-        .withWatermark("ts", "60 days")
-        .select(F.col("user_id").alias("s_user"), F.col("ts").alias("s_ts"))
-    )
-    purchases = (
-        spark.readStream.schema("user_id long, ts timestamp, event_id long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(purch_dir)
-        .withWatermark("ts", "60 days")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-            "event_id",
+    with scoped_conf(
+        spark, {_SHUFFLE: str(stream_state_partitions(sign_dir, purch_dir))}
+    ):
+        signups = (
+            spark.readStream.schema("user_id long, ts timestamp")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(sign_dir)
+            .withWatermark("ts", "60 days")
+            .select(
+                F.col("user_id").alias("s_user"), F.col("ts").alias("s_ts")
+            )
         )
-    )
-    joined = signups.join(
-        purchases,
-        (F.col("s_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("s_ts"))
-        & (F.col("p_ts") <= F.col("s_ts") + F.expr("INTERVAL 7 DAYS")),
-    )
-    name = f"ss_join_{uuid.uuid4().hex[:8]}"
-    query = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir("ss_join_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
+        purchases = (
+            spark.readStream.schema(
+                "user_id long, ts timestamp, event_id long"
+            )
+            .option("maxFilesPerTrigger", 1)
+            .parquet(purch_dir)
+            .withWatermark("ts", "60 days")
+            .select(
+                F.col("user_id").alias("p_user"),
+                F.col("ts").alias("p_ts"),
+                "event_id",
+            )
+        )
+        joined = signups.join(
+            purchases,
+            (F.col("s_user") == F.col("p_user"))
+            & (F.col("p_ts") >= F.col("s_ts"))
+            & (F.col("p_ts") <= F.col("s_ts") + F.expr("INTERVAL 7 DAYS")),
+        )
+        name = f"ss_join_{uuid.uuid4().hex[:8]}"
+        query = (
+            joined.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .option("checkpointLocation", scratch_dir("ss_join_ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
         query.awaitTermination()
-    finally:
-        # restore even when the stream raises — a failed stream must
-        # not leak the pinned partition count into later queries
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
     result = (
         spark.table(name)
         .groupBy(F.col("s_user").alias("user_id"))
@@ -641,34 +621,28 @@ def streaming_enrichment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     data_dir = os.path.join(stage, "data")
     events.coalesce(2).write.mode("overwrite").parquet(data_dir)
 
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_state_partitions(data_dir))
-    )
-    stream = (
-        spark.readStream.schema("event_type string, cents long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(data_dir)
-    )
-    enriched = stream.join(dim, "event_type").groupBy("weight_tier").agg(
-        F.count("*").alias("cnt"),
-        F.sum(F.col("cents") * F.col("weight")).alias("weighted_cents"),
-    )
-    name = f"enrich_{uuid.uuid4().hex[:8]}"
-    query = (
-        enriched.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", scratch_dir("enrich_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
+    with scoped_conf(
+        spark, {_SHUFFLE: str(stream_state_partitions(data_dir))}
+    ):
+        stream = (
+            spark.readStream.schema("event_type string, cents long")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(data_dir)
+        )
+        enriched = stream.join(dim, "event_type").groupBy("weight_tier").agg(
+            F.count("*").alias("cnt"),
+            F.sum(F.col("cents") * F.col("weight")).alias("weighted_cents"),
+        )
+        name = f"enrich_{uuid.uuid4().hex[:8]}"
+        query = (
+            enriched.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete")
+            .option("checkpointLocation", scratch_dir("enrich_ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
         query.awaitTermination()
-    finally:
-        # restore even when the stream raises — a failed stream must
-        # not leak the pinned partition count into later queries
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
     return spark.table(name)
 
 
@@ -702,29 +676,23 @@ def streaming_upsert_pipe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = stage_stream_dir(spark, sf_dir, "events")
     silver = scratch_dir("upsert_silver") + "/t"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_state_partitions(path))
-    )
-    stream = (
-        spark.readStream.schema(spark.read.parquet(path).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
-    query = (
-        stream.writeStream.foreachBatch(
-            cdc.foreach_batch_upsert(silver, ["user_id"], ["ts", "event_id"])
+    with scoped_conf(spark, {_SHUFFLE: str(stream_state_partitions(path))}):
+        stream = (
+            spark.readStream.schema(spark.read.parquet(path).schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(path)
         )
-        .option("checkpointLocation", scratch_dir("upsert_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
+        query = (
+            stream.writeStream.foreachBatch(
+                cdc.foreach_batch_upsert(
+                    silver, ["user_id"], ["ts", "event_id"]
+                )
+            )
+            .option("checkpointLocation", scratch_dir("upsert_ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
         query.awaitTermination()
-    finally:
-        # restore even when the stream raises — a failed stream must
-        # not leak the pinned partition count into later queries
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
     return (
         spark.read.parquet(silver)
         .groupBy("event_type")
@@ -768,34 +736,26 @@ def streaming_upsert_partitioned_pipe(spark: SparkSession, sf_dir: str) -> DataF
     silver = os.path.join(
         scratch_dir("upsert_part_silver"), "t"
     )
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_state_partitions(path))
-    )
-    stream = (
-        spark.readStream.schema(spark.read.parquet(path).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-        .withColumn("user_bucket", F.col("user_id") % 8)
-    )
-    query = (
-        stream.writeStream.foreachBatch(
-            cdc.foreach_batch_upsert_partitioned(
-                silver, ["user_id"], ["ts", "event_id"], "user_bucket"
+    with scoped_conf(spark, {_SHUFFLE: str(stream_state_partitions(path))}):
+        stream = (
+            spark.readStream.schema(spark.read.parquet(path).schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(path)
+            .withColumn("user_bucket", F.col("user_id") % 8)
+        )
+        query = (
+            stream.writeStream.foreachBatch(
+                cdc.foreach_batch_upsert_partitioned(
+                    silver, ["user_id"], ["ts", "event_id"], "user_bucket"
+                )
             )
+            .option(
+                "checkpointLocation", scratch_dir("upsert_part_ckpt")
+            )
+            .trigger(availableNow=True)
+            .start()
         )
-        .option(
-            "checkpointLocation", scratch_dir("upsert_part_ckpt")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
         query.awaitTermination()
-    finally:
-        # restore even when the stream raises — a failed stream must
-        # not leak the pinned partition count into later queries
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
     return (
         spark.read.parquet(silver)
         .groupBy("user_bucket")
@@ -909,11 +869,7 @@ def streaming_dq_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from automatic_etl_spark.session import stream_state_partitions
     from automatic_etl_spark.streaming.dq import run_dq_gate
 
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_state_partitions(path))
-    )
-    try:
+    with scoped_conf(spark, {_SHUFFLE: str(stream_state_partitions(path))}):
         stream = (
             spark.readStream.schema(spark.read.parquet(path).schema)
             .option("maxFilesPerTrigger", 1)
@@ -930,8 +886,6 @@ def streaming_dq_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             },
             checkpoint=scratch_dir("dq_ckpt"),
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
     rows = [
         (chk, totals[chk], totals["rows_scanned"])
         for chk in ("null_value", "value_above_100", "unknown_event_type")
@@ -992,13 +946,10 @@ def python_stream_source_totals(
     pydatasource.register(spark)
     from automatic_etl_spark.session import stream_state_partitions
 
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(stream_state_partitions(rows=rows)),
-    )
-    name = f"pyds_stream_{uuid.uuid4().hex[:8]}"
-    try:
+    with scoped_conf(
+        spark, {_SHUFFLE: str(stream_state_partitions(rows=rows))}
+    ):
+        name = f"pyds_stream_{uuid.uuid4().hex[:8]}"
         stream = (
             spark.readStream.format(pydatasource.FORMAT_NAME)
             .option("rows", str(rows))
@@ -1038,8 +989,6 @@ def python_stream_source_totals(
             time.sleep(0.05)
         query.stop()
         query.awaitTermination(30)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
     return (
         spark.table(name)
         .groupBy((F.col("user_id") % 5).alias("cohort"))
@@ -1083,12 +1032,8 @@ def state_store_inspection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = stage_stream_dir(spark, sf_dir)
     chk = scratch_dir("state_chk")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_state_partitions(path))
-    )
-    name = f"state_inspect_{uuid.uuid4().hex[:8]}"
-    try:
+    with scoped_conf(spark, {_SHUFFLE: str(stream_state_partitions(path))}):
+        name = f"state_inspect_{uuid.uuid4().hex[:8]}"
         stream = spark.readStream.schema(
             spark.read.parquet(path).schema
         ).parquet(path)
@@ -1112,8 +1057,6 @@ def state_store_inspection(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
     state = spark.read.format("statestore").load(chk)
     return state.select(
         F.col("key.event_type").alias("event_type"),

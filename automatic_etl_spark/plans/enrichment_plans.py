@@ -55,9 +55,7 @@ from pyspark.sql import functions as F
 from automatic_etl_spark.functions import text as tx
 from automatic_etl_spark.functions import vectors as vec
 from automatic_etl_spark.operators import quantiles as qt
-from automatic_etl_spark.operators.checkpoints import (
-    release as _release_checkpoint,
-)
+from automatic_etl_spark.operators.checkpoints import release
 from automatic_etl_spark.operators import similarity as sim
 from automatic_etl_spark.plans.registry import register
 from automatic_etl_spark.plans.relational import qround
@@ -470,7 +468,7 @@ def _pr_edges_iterate_ready(edges: DataFrame) -> DataFrame:
     )
     deg = sym_bare.groupBy("src").agg(F.count("*").alias("d"))
     sym = sym_bare.join(deg, "src").localCheckpoint(eager=True)
-    _release_checkpoint(sym_bare)
+    release(sym_bare)
     return sym
 
 

@@ -20,6 +20,7 @@ from automatic_etl_spark.operators.ddl import write_bucketed
 from automatic_etl_spark.plans.registry import register
 from automatic_etl_spark.plans.relational import qround
 from automatic_etl_spark.scratch import scratch_dir
+from automatic_etl_spark.session import scoped_conf
 from automatic_etl_spark.sources import files
 from automatic_etl_spark.sources.parquet import table
 
@@ -734,18 +735,12 @@ def dynamic_partition_overwrite_agg(
         .withColumn("value", F.col("value") * 2)
         .repartition(1)
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set(
-        "spark.sql.sources.partitionOverwriteMode", "dynamic"
-    )
-    try:
+    with scoped_conf(
+        spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    ):
         restated.write.partitionBy("event_type").mode(
             "overwrite"
         ).parquet(target)
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev
-        )
     back = spark.read.parquet(target)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("cnt"),

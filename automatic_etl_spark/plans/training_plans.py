@@ -167,7 +167,7 @@ def boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate (zipfian skew; AQE skew join applies) and the doc-keyed
     rollup; the corpus size is a broadcast scalar."""
     docs = table(spark, sf_dir, "documents")
-    # NOT checkpointed (r14 A/B, tools/ab_interleaved.py boiler_ckpt):
+    # NOT checkpointed (r14 interleaved A/B, OPTIMIZATION_r14.md):
     # grams has only TWO consumers and the token-bind fix made the
     # explode front cheap, so materializing it measured +6% median at
     # sf0.1 (block write + extra barrier job outweigh one saved

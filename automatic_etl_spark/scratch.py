@@ -15,11 +15,11 @@ so the fixed-name residue guarantee survives the pid component; a
 SIGKILL'd process leaves at most one orphan tree, bounded in size and
 reclaimed by normal tempdir hygiene.
 
-Assumptions (same as the session-conf toggles in the streaming plans):
-the engine's query functions run single-threaded per process — two
-concurrent invocations of the SAME call site in one process would
-race on the shared tree. Names must be unique per call site for the
-same reason.
+Assumptions (shared with ``session.scoped_conf``, which scopes a
+session conf in time, not per thread): the engine's query functions
+run single-threaded per process — two concurrent invocations of the
+SAME call site in one process would race on the shared tree. Names
+must be unique per call site for the same reason.
 """
 
 from __future__ import annotations

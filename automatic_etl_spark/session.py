@@ -15,6 +15,8 @@ Semantics pinned here (reference parity — see SURVEY.md §1.3, §7):
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -117,3 +119,26 @@ def get_spark(
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
     return builder.getOrCreate()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: Mapping[str, str]) -> Iterator[None]:
+    """Set session conf keys for the ``with`` body only.
+
+    Each key's prior value is saved on entry and restored on exit —
+    also when the body raises — and a key that was not explicitly set
+    before is unset again, so the session falls back to its default.
+    The session conf is process-global: this scopes a conf in time,
+    not per thread.
+    """
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -20,7 +20,8 @@ residual drift is attributable. Within a group the r4 discipline
 stays: warm each query immediately before measuring it on the
 smallest fixture, reset session state outside the timed window, and
 measure streaming (stateful, state-store-leaving) queries in the last
-group.
+group. The child protocol and the warm/reset/sample loop live in
+tools/measure.py, shared with the tools/ harnesses.
 
 Round-5 addition: each query is measured TWICE post-warm and the MIN
 is reported (both samples land in ``runs``). The sandbox VM shows
@@ -35,11 +36,11 @@ from __future__ import annotations
 import json
 import os
 import re
-import subprocess
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from tools import measure  # noqa: E402
 
 # One tuple per fresh-JVM group, in measurement order. Python-worker
 # paths (mapInPandas) and iterative jobs first, batch SQL in the
@@ -147,85 +148,8 @@ GROUPS: tuple[tuple[str, ...], ...] = (
 HEADLINE: tuple[str, ...] = tuple(n for g in GROUPS for n in g)
 
 
-def _validate_groups() -> None:
-    """Loud import-time guard: a renamed registry query would
-    otherwise KeyError inside the child mid-group and discard the
-    whole group's measurements (the per-query try exists precisely to
-    isolate failures)."""
-    from automatic_etl_spark.plans.all_plans import REGISTRY
-
-    missing = [n for n in HEADLINE if n not in REGISTRY]
-    assert not missing, f"bench GROUPS name(s) not in REGISTRY: {missing}"
-    assert len(set(HEADLINE)) == len(HEADLINE), "duplicate bench names"
-
-
-def run_group(names: tuple[str, ...], sf_dir: str) -> None:
-    """Child process: measure one group in a fresh JVM; print one JSON
-    line with timings, per-query session age, and contained errors."""
-    from automatic_etl_spark.plans.all_plans import REGISTRY
-    from automatic_etl_spark.session import get_spark
-
-    spark = get_spark(app_name="automatic-etl-spark-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    session_start = time.perf_counter()
-
-    # Warm IMMEDIATELY before each measurement, on the SMALLEST fixture:
-    # the same plan shape generates the same codegen classes and spawns
-    # the same Python workers (mapInPandas paths), so the measured run
-    # reflects execution, not JIT/worker startup.
-    warm_dir = "/root/testdata/sf0.001"
-    warm = os.path.isdir(warm_dir)
-    if not warm:
-        REGISTRY["count_star"][0](spark, sf_dir).collect()
-
-    def _reset_session_state() -> None:
-        # Queries leave memory-sink temp views, cached blocks, and
-        # garbage behind; reset OUTSIDE the timed window.
-        for t in spark.catalog.listTables():
-            if t.isTemporary:
-                spark.catalog.dropTempView(t.name)
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
-
-    timings: dict[str, float] = {}
-    runs: dict[str, list[float]] = {}
-    ages: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    _validate_groups()
-    for name in names:
-        fn, _oracle = REGISTRY[name]
-        try:
-            if warm:
-                fn(spark, warm_dir).collect()
-            # Best-of-2: this sandbox's VM shows multi-x scheduler-noise
-            # spikes on multi-job iterative queries (round-5 finding:
-            # near_dup_canonical 10-30 s across identical runs). Two
-            # adjacent post-warm measurements with the min reported
-            # suppress spike noise; both raw values are recorded so the
-            # noise floor stays observable in the JSON.
-            samples: list[float] = []
-            for _ in range(2):
-                _reset_session_state()
-                if not samples:
-                    ages[name] = round(time.perf_counter() - session_start, 1)
-                start = time.perf_counter()
-                fn(spark, sf_dir).collect()
-                samples.append(round(time.perf_counter() - start, 3))
-            runs[name] = samples
-            timings[name] = min(samples)
-        except Exception as exc:  # noqa: BLE001 — isolation is the point
-            errors[name] = f"{type(exc).__name__}: {str(exc)[:300]}"
-            print(f"bench: {name} FAILED: {errors[name]}", file=sys.stderr)
-    print(json.dumps({"queries": timings, "runs": runs,
-                      "session_age_sec": ages, "errors": errors}))
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-    if len(sys.argv) == 3 and sys.argv[1] == "--child":
-        run_group(GROUPS[int(sys.argv[2])], sf_dir)
-        return
 
     match = re.search(r"sf([\d.]+)", sf_dir)
     sf = float(match.group(1).rstrip(".")) if match else -1.0
@@ -236,41 +160,22 @@ def main() -> None:
     # from the file alone, matching loadavg_end below).
     loadavg_start = list(os.getloadavg())
 
-    # Per-group fault isolation on top of per-query isolation inside
-    # the child: a wedged JVM loses one group's signal, never the
-    # round's (BENCH_r03 lesson).
+    # One fresh JVM per group, best-of-2 per query inside it. Failures
+    # are isolated per query inside the child and per group around it:
+    # a wedged JVM loses one group's signal, never the round's
+    # (BENCH_r03 lesson).
     timings: dict[str, float] = {}
     runs: dict[str, list[float]] = {}
     ages: dict[str, float] = {}
     errors: dict[str, str] = {}
-    for i, names in enumerate(GROUPS):
-        try:
-            proc = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--child", str(i)],
-                capture_output=True,
-                text=True,
-                timeout=1800,
-            )
-        except subprocess.TimeoutExpired:
-            # a wedged group JVM must cost ONE group's signal, not the
-            # round's: uncaught, TimeoutExpired aborted main() before
-            # bench_detail.json or the driver-contract line was emitted
-            for name in names:
-                errors[name] = f"group {i} timed out after 1800s"
-            print(f"bench: group {i} TIMED OUT", file=sys.stderr)
-            continue
-        line = proc.stdout.strip().splitlines()[-1] if proc.stdout.strip() else ""
-        try:
-            child = json.loads(line)
-            timings.update(child["queries"])
-            runs.update(child.get("runs", {}))
-            ages.update(child["session_age_sec"])
-            errors.update(child["errors"])
-        except (json.JSONDecodeError, KeyError):
-            tail = (proc.stderr or "")[-300:]
-            for name in names:
-                errors[name] = f"group {i} JVM failed rc={proc.returncode}: {tail}"
-            print(f"bench: group {i} FAILED rc={proc.returncode}", file=sys.stderr)
+    for names in GROUPS:
+        for name, row in measure.run_child(names, sf_dir, 2, 1800).items():
+            if "error" in row:
+                errors[name] = row["error"]
+                continue
+            timings[name] = row["min"]
+            runs[name] = row["runs"]
+            ages[name] = row["session_age_sec"]
 
     # The final stdout line must stay under the driver's 2,000-char
     # stdout TAIL (measured in BENCH_r06: the captured tail is exactly
@@ -294,6 +199,7 @@ def main() -> None:
         # makes that forensics one field-read instead of a re-run
         "loadavg_start": loadavg_start,
         "loadavg_end": list(os.getloadavg()),
+        "host": measure.host_fingerprint(loadavg_start),
     }
     log_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "logs")
     os.makedirs(log_dir, exist_ok=True)

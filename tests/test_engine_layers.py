@@ -986,17 +986,12 @@ def test_connected_components_bounded_iterations(spark):
         connected_components(nodes, edges, max_iter=2)
 
 
-def test_connected_components_delta_frontier_round_counts(spark):
-    """The r15 ``delta_frontier`` mode (measured-rejected as default,
-    kept as the long-chain/at-scale knob) must not change convergence
-    round counts — the frontier only drops provably-useless min
-    contributions — and must stay exact on a graph that exercises
-    every frontier path: a diameter-5 chain, a clique, and singletons,
-    in all four (delta_frontier × compress) combinations. With
-    compress=True the frontier must also carry JUMP-changed nodes
-    (j_changed) — compress converges strictly faster on the chain,
-    which only happens if jump-lowered labels keep propagating from
-    the frontier."""
+def test_connected_components_round_counts(spark):
+    """Exact components and pinned round counts on a graph with a
+    diameter-5 chain, a clique and singletons, with and without
+    pointer-jumping compress: the plain path needs 5 hook rounds + the
+    no-change probe, and compress converges in strictly fewer rounds
+    (information reach ~2^t instead of t)."""
     from automatic_etl_spark.operators.graph import connected_components
 
     nodes = spark.createDataFrame(
@@ -1012,26 +1007,39 @@ def test_connected_components_delta_frontier_round_counts(spark):
                 **{i: 7 for i in (7, 8, 9)},
                 **{i: i for i in (10, 11, 12)}}
 
-    rounds: dict[tuple[bool, bool], int] = {}
-    for delta in (False, True):
-        for compress in (False, True):
-            stats: dict = {}
-            got = {
-                r.node: r.component
-                for r in connected_components(
-                    nodes, edges, compress=compress,
-                    delta_frontier=delta, stats=stats,
-                ).collect()
-            }
-            assert got == expected, (delta, compress)
-            rounds[(delta, compress)] = stats["rounds"]
-    # delta mode must replay the exact round structure of the default
-    assert rounds[(True, False)] == rounds[(False, False)]
-    assert rounds[(True, True)] == rounds[(False, True)]
+    rounds: dict[bool, int] = {}
+    for compress in (False, True):
+        stats: dict = {}
+        got = {
+            r.node: r.component
+            for r in connected_components(
+                nodes, edges, compress=compress, stats=stats,
+            ).collect()
+        }
+        assert got == expected, compress
+        rounds[compress] = stats["rounds"]
     # diameter-5 chain: 5 hook rounds + 1 no-change probe round
-    assert rounds[(False, False)] == 6
+    assert rounds[False] == 6
     # pointer jumping reaches ~2^t: strictly fewer rounds than plain
-    assert rounds[(False, True)] < rounds[(False, False)]
+    assert rounds[True] < rounds[False]
+
+
+def test_checkpoint_release_reflection_path_resolves(spark):
+    """operators/checkpoints.release swallows failures (falling back
+    to GC-driven cleanup), so pin its reflection path here WITHOUT the
+    except: if PySpark internals move, this fails loudly. The release
+    itself must drop the checkpoint's blocks from storage."""
+    from automatic_etl_spark.operators.checkpoints import release
+
+    def cached_rdd_ids():
+        sc = spark.sparkContext._jsc.sc()
+        return {info.id() for info in sc.getRDDStorageInfo()}
+
+    df = spark.range(10).localCheckpoint(eager=True)
+    rdd = df._jdf.queryExecution().analyzed().rdd()
+    assert rdd.id() in cached_rdd_ids()
+    release(df)
+    assert rdd.id() not in cached_rdd_ids()
 
 
 def test_cleanup_catalog_ignores_temp_views(spark, tmp_path):

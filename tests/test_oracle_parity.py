@@ -145,7 +145,8 @@ def test_near_dup_cc_round_count_pinned(spark, sf_dir):
     (diameter 2 → 3 plain rounds — the number in COVERAGE.md's
     attribution). Pointer doubling stays at 2 in both regimes. Any count above these means the verified edge set — and
     near_dup_canonical's cost — changed shape; re-run
-    tools/attr_near_dup.py and update COVERAGE.md in the same commit.
+    ``perfbench/run.py --workload curation --trace 1`` for the
+    per-layer split and update COVERAGE.md in the same commit.
     """
     from automatic_etl_spark.operators.graph import connected_components
     from automatic_etl_spark.plans.curation_plans import _near_dup_edges
@@ -157,7 +158,8 @@ def test_near_dup_cc_round_count_pinned(spark, sf_dir):
     sf_name = os.path.basename(os.path.normpath(sf_dir))
     assert sf_name in expected_plain, (
         f"no round-count pin recorded for fixture {sf_name!r} — "
-        "measure it (tools/attr_near_dup.py) and add it here"
+        "measure it (perfbench/run.py --workload curation --trace 1) "
+        "and add it here"
     )
     corpus, edges = _near_dup_edges(spark, sf_dir)
     nodes = corpus.select("doc_id")

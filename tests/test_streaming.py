@@ -583,3 +583,47 @@ def test_upsert_path_probe_semantics(spark, tmp_path):
     written = str(tmp_path / "t")
     spark.range(3).write.parquet(written)
     assert _path_exists(spark, written)
+
+
+def test_scoped_conf_restores_or_unsets(spark):
+    """scoped_conf restores a set key to its prior value and unsets a
+    key that was not set before — also when the body raises."""
+    import pytest
+
+    from automatic_etl_spark.session import scoped_conf
+
+    key, fresh = "spark.sql.shuffle.partitions", "spark_graft.test.scoped"
+    before = spark.conf.get(key)
+    with pytest.raises(ValueError):
+        with scoped_conf(spark, {key: "3", fresh: "x"}):
+            assert spark.conf.get(key) == "3"
+            assert spark.conf.get(fresh) == "x"
+            raise ValueError("body failed")
+    assert spark.conf.get(key) == before
+    assert spark.conf.get(fresh, None) is None
+
+
+def test_failed_stream_plan_leaves_session_conf_unchanged(
+    spark, sf_dir, monkeypatch
+):
+    """A conf-mutating stream plan that fails before awaitTermination
+    (here: the stream never starts) must not leave its pinned
+    partition count on the session."""
+    import pytest
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from automatic_etl_spark.plans.cdc_plans import streaming_hourly_counts
+
+    def _fail(self, *a, **k):
+        raise RuntimeError("stream start failed")
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        monkeypatch.setattr(DataStreamWriter, "start", _fail)
+        with pytest.raises(RuntimeError, match="stream start failed"):
+            streaming_hourly_counts(spark, sf_dir)
+        assert spark.conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, before)

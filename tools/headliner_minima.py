@@ -10,9 +10,8 @@ re-litigating ambient load). This tool records, once per round, a
 LOAD-CONTROLLED column: the minimum over N fresh-JVM samples per
 headliner at sf0.1, with the 1-min loadavg captured before every
 sample so idleness is auditable from the artifact alone. Cross-round
-perf questions should compare THESE minima (same methodology as the
-r10/r11 pagerank and python_stream isolations, tools/scale_stress.py
---child), not the in-bench driver numbers.
+perf questions should compare THESE minima (one fresh JVM per sample,
+tools/measure.py), not the in-bench driver numbers.
 
 Usage:
     python tools/headliner_minima.py --round 12 [--samples 4] [names...]
@@ -35,14 +34,15 @@ import glob
 import json
 import os
 import re
-import subprocess
 import sys
+import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from tools import measure  # noqa: E402
+
 SF_DIR = "/root/testdata/sf0.1"
-CHILD = os.path.join(REPO, "tools", "scale_stress.py")
 
 
 RETENTION_ROUNDS = 3  # keep a query while in any of the last N top-10s
@@ -86,53 +86,36 @@ def retention_headliners() -> tuple[list[int], list[str]]:
     return rounds, sorted(names)
 
 
-def one_sample(
-    name: str, idle_below: float = 0.0
-) -> tuple[float | None, float, str | None]:
-    """One fresh-JVM measurement (warm on sf0.001, time sf0.1);
-    returns (sec|None, loadavg_1min_before, gate_violation|None).
+def idle_gate(name: str, idle_below: float) -> str | None:
+    """Sleep (up to 4 min) until the 1-min loadavg decays under
+    ``idle_below`` before a sample launches; returns the violated-gate
+    cause, or None.
 
-    ``idle_below`` > 0 sleeps (up to 4 min) until the 1-min loadavg
-    decays under the threshold before launching the child. Without it,
-    back-to-back serial children leave the PREVIOUS child's load in
-    the 1-min average (no actual contention — the child exited — but
-    the recorded "before" value stops proving idleness, the exact
-    property this artifact exists to carry).
-
-    If the sample still launches above threshold, it runs anyway (load
-    bias only inflates minima, never fakes a fast run) but the third
-    return value names the cause so the artifact records the
-    violated-gate sample explicitly instead of silently (r12 ADVICE):
-    ``"timed_out"`` when the 240 s budget was exhausted still above
-    threshold, ``"launched_above_threshold"`` when the wait loop exited
-    early (load dipped under) but load bounced back above before launch
-    (r13 ADVICE — previously mislabeled as a timeout)."""
-    from tools.scale_stress import run_child
-
-    gate_violation = None
-    if idle_below > 0:
-        waited = 0.0
-        while os.getloadavg()[0] >= idle_below and waited < 240:
-            import time
-            time.sleep(10)
-            waited += 10
-        if os.getloadavg()[0] >= idle_below:
-            gate_violation = (
-                "timed_out" if waited >= 240 else "launched_above_threshold")
-            cause = (
-                f"idle gate TIMED OUT after {waited:.0f}s"
-                if gate_violation == "timed_out"
-                else f"idle gate decayed then bounced back above "
-                     f"threshold before launch (waited {waited:.0f}s)")
-            sys.stderr.write(
-                f"{name}: {cause} "
-                f"(loadavg1={os.getloadavg()[0]:.2f} >= {idle_below}); "
-                "sampling anyway — flagged in artifact\n")
-    load1 = os.getloadavg()[0]
-    sec, err = run_child(name, SF_DIR, timeout=1800)
-    if err is not None:
-        sys.stderr.write(f"{name}: child failed: {err}\n")
-    return sec, round(load1, 2), gate_violation
+    Without the gate, back-to-back serial children leave the PREVIOUS
+    child's load in the 1-min average (no actual contention — the
+    child exited — but the recorded value stops proving idleness, the
+    exact property this artifact exists to carry). If load is still
+    above threshold, the sample runs anyway (load bias only inflates
+    minima, never fakes a fast run) and the cause is recorded (r12
+    ADVICE): ``"timed_out"`` when the 240 s budget was exhausted still
+    above threshold, ``"launched_above_threshold"`` when load dipped
+    under but bounced back above before launch (r13 ADVICE)."""
+    waited = 0.0
+    while os.getloadavg()[0] >= idle_below and waited < 240:
+        time.sleep(10)
+        waited += 10
+    if os.getloadavg()[0] < idle_below:
+        return None
+    violation = "timed_out" if waited >= 240 else "launched_above_threshold"
+    cause = (
+        f"idle gate TIMED OUT after {waited:.0f}s"
+        if violation == "timed_out"
+        else f"idle gate decayed then bounced back above threshold "
+             f"before launch (waited {waited:.0f}s)")
+    sys.stderr.write(
+        f"{name}: {cause} (loadavg1={os.getloadavg()[0]:.2f} >= "
+        f"{idle_below}); sampling anyway — flagged in artifact\n")
+    return violation
 
 
 def main() -> int:
@@ -153,64 +136,49 @@ def main() -> int:
         source = (f"retention policy: union of BENCH top-10s of rounds "
                   f"{bench_rounds} ({len(names)} names)")
 
-    out: dict = {
-        "_meta": {
-            "round": args.round,
-            "date": datetime.date.today().isoformat(),
-            "harness": (
-                "tools/headliner_minima.py — fresh JVM per sample via "
-                "tools/scale_stress.py --child (warmed on sf0.001, "
-                "timed on sf0.1), min over samples reported"
-            ),
-            "headliner_source": source,
-            "retention_policy": (
-                f"r13-verdict retention: a query stays in this column "
-                f"while it appears in ANY of the last {RETENTION_ROUNDS} "
-                "rounds' BENCH top-10s and is archived once it rotates "
-                "out of all of them (history remains in older "
-                "headliner_minima_r*.json files) — bounds the column "
-                "that the old newest-top-10 ∪ previous-names union rule "
-                "grew monotonically"
-            ),
-            "samples_per_query": args.samples,
-            "idle_below": args.idle_below,
-            "purpose": (
-                "load-controlled cross-round perf column (VERDICT r11 "
-                "#3): compare these minima across rounds, not the "
-                "in-bench driver totals, which carry host-regime drift"
-            ),
-        },
+    meta = {
+        "round": args.round,
+        "date": datetime.date.today().isoformat(),
+        "headliner_source": source,
+        "retention_policy": (
+            f"r13-verdict retention: a query stays in this column while "
+            f"it appears in ANY of the last {RETENTION_ROUNDS} rounds' "
+            "BENCH top-10s and is archived once it rotates out of all of "
+            "them (history remains in older headliner_minima_r*.json "
+            "files)"
+        ),
+        "idle_below": args.idle_below,
+        "purpose": (
+            "load-controlled cross-round perf column (VERDICT r11 #3): "
+            "compare these minima across rounds, not the in-bench "
+            "driver totals, which carry host-regime drift"
+        ),
     }
     dst = os.path.join(
         REPO, "bench_baselines", f"headliner_minima_r{args.round:02d}.json"
     )
+    loadavg_start = list(os.getloadavg())
+    rows: dict = {}
     for name in names:
-        samples: list[float] = []
-        loads: list[float] = []
-        gate_violations: list[str | None] = []
-        for _ in range(args.samples):
-            sec, load1, violation = one_sample(
-                name, idle_below=args.idle_below)
-            if sec is not None:
-                samples.append(sec)
-            loads.append(load1)
-            gate_violations.append(violation)
-        row = {
-            "min": min(samples) if samples else None,
-            "samples": samples,
-            "loadavg1_before_each": loads,
-        }
+        violations: list[str | None] = []
+        gate = None
+        if args.idle_below > 0:
+            def gate():
+                violations.append(idle_gate(name, args.idle_below))
+        row = measure.fresh_jvm_samples(name, SF_DIR, args.samples,
+                                        before_each=gate)
         # only materialize the flag when a gate was actually violated,
         # so the common all-idle artifact stays visibly clean (r12
-        # ADVICE); values name the cause — "timed_out" vs
-        # "launched_above_threshold" (r13 ADVICE)
-        if any(gate_violations):
-            row["gate_violation_per_sample"] = gate_violations
-        out[name] = row
+        # ADVICE)
+        if any(violations):
+            row["gate_violation_per_sample"] = violations
+        rows[name] = row
         print(f"{name}: {row}", file=sys.stderr)
-        # flush after every query: a wedged/killed child (run_child
-        # returns None on timeout, but the process itself can die too)
-        # must not discard the completed rows of a ~1 h collection
+        # flush after every query: a killed collection must not
+        # discard the completed rows of a ~1 h run
+        out = measure.artifact(rows, "fresh-jvm-per-sample", SF_DIR,
+                               args.samples, loadavg_start)
+        out["_meta"] = meta
         with open(dst, "w") as f:
             json.dump(out, f, indent=1)
 

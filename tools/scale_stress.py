@@ -39,8 +39,9 @@ construction, and any superlinear wall-time is a plan defect:
   lineitem-driven BI headliners (shipping_priority, pricing_summary,
   revenue_by_nation) into the 10x record (VERDICT r8 #4).
 
-Each measurement runs in a FRESH JVM (same methodology as bench.py),
-warmed on sf0.001 immediately before timing.
+Each measurement runs in a FRESH JVM per sample (tools/measure.py,
+the same discipline as bench.py), warmed on sf0.001 immediately
+before timing.
 
 Usage:
     python tools/scale_stress.py            # build + measure + report
@@ -52,9 +53,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import subprocess
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -446,52 +445,10 @@ def build_stress_dir() -> None:
     replicate("lineitem", mut_lineitem, {"l_orderkey": ORDERKEY_SHIFT})
 
 
-def run_child(name: str, sf_dir: str, timeout: int = 3600):
-    """Spawn one fresh-JVM measurement child (the ``--child`` protocol
-    below) and parse its result; returns ``(sec | None, err | None)``.
-    Shared by this harness and tools/headliner_minima.py so the child
-    invocation/output contract has exactly one implementation."""
-    try:
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--child",
-             name, sf_dir],
-            capture_output=True, text=True, timeout=timeout,
-        )
-    except subprocess.TimeoutExpired:
-        return None, f"child timed out after {timeout}s"
-    line = proc.stdout.strip().splitlines()[-1] if proc.stdout.strip() else "{}"
-    try:
-        return json.loads(line)["sec"], None
-    except (json.JSONDecodeError, KeyError):
-        return None, (proc.stderr or "")[-300:]
-
-
-def measure_child(name: str, sf_dir: str) -> None:
-    from automatic_etl_spark.plans.all_plans import REGISTRY
-    from automatic_etl_spark.session import get_spark
-
-    spark = get_spark(app_name=f"scale-stress-{name}")
-    spark.sparkContext.setLogLevel("ERROR")
-    fn = SPECIAL[name] if name in SPECIAL else REGISTRY[name][0]
-    fn(spark, "/root/testdata/sf0.001").collect()  # warm: codegen + workers
-    start = time.perf_counter()
-    fn(spark, sf_dir).collect()
-    print(json.dumps({"sec": round(time.perf_counter() - start, 2)}))
-
-
 def main() -> None:
-    if len(sys.argv) == 4 and sys.argv[1] == "--child":
-        measure_child(sys.argv[2], sys.argv[3])
-        return
-
     # An unrecognized flag must not silently fall through to the
     # build-and-measure path: `--help` once cost a stray staging JVM
     # (r13). Known flags only; anything else dash-prefixed is an error.
-    # --child with the wrong arity is a distinct, clearer error rather
-    # than "unknown flag" (r13 ADVICE) — it still fails before staging.
-    if "--child" in sys.argv[1:]:
-        sys.exit("--child requires exactly <name> <sf_dir>; usage:\n"
-                 "  python tools/scale_stress.py --child <name> <sf_dir>")
     unknown = [a for a in sys.argv[1:]
                if a.startswith("-") and a not in ("--build",)]
     if unknown:
@@ -499,31 +456,31 @@ def main() -> None:
                  "  python tools/scale_stress.py [names...]  "
                  "# build + measure + report\n"
                  "  python tools/scale_stress.py --build     "
-                 "# stage the stress corpus only\n"
-                 "  python tools/scale_stress.py --child <name> <sf_dir>")
+                 "# stage the stress corpus only")
 
     build_stress_dir()
     if "--build" in sys.argv:
         print(f"staged {STRESS_DIR}")
         return
 
+    from tools.measure import artifact, fresh_jvm_samples
+
     # optional positional query names: measure only those
     wanted = [a for a in sys.argv[1:] if not a.startswith("-")]
     names = [n for n in QUERIES if not wanted or n in wanted]
 
+    loadavg_start = list(os.getloadavg())
     report = {}
     for name in names:
         row = {}
         for label, sf_dir in (("sf0.1", BASE_DIR), ("10x", STRESS_DIR)):
-            sec, err = run_child(name, sf_dir)
-            row[label] = sec
-            if err is not None:
-                row[f"{label}_err"] = err
-        if row.get("sf0.1") and row.get("10x"):
-            row["factor"] = round(row["10x"] / row["sf0.1"], 2)
+            row[label] = fresh_jvm_samples(name, sf_dir, 1, timeout=3600)
+        if row["sf0.1"]["min"] and row["10x"]["min"]:
+            row["factor"] = round(row["10x"]["min"] / row["sf0.1"]["min"], 2)
         report[name] = row
         print(f"{name}: {row}", file=sys.stderr)
-    print(json.dumps(report, indent=2))
+    print(json.dumps(artifact(report, "fresh-jvm-per-sample", STRESS_DIR,
+                              1, loadavg_start), indent=2))
 
 
 if __name__ == "__main__":

@@ -7,9 +7,10 @@ count is not the binding resource at that scale, which left the
 100 TB parallelism claim resting on plan shape alone. This campaign
 measures the bench top-10 at the 10× stress corpus
 (/tmp/sfstress10, tools/scale_stress.py layout) under
-SPARK_GRAFT_CPUS=32 vs =8 — fresh JVM per sample via the
-scale_stress child protocol, N samples each, min reported — and
-writes the ratio table the verdict asked for.
+SPARK_GRAFT_CPUS=32 vs =8 — fresh JVM per sample (tools/measure.py),
+N samples each, min reported — and writes the ratio table the verdict
+asked for. SPARK_GRAFT_CPUS is exported per child so the session
+master AND shuffle partitions track it.
 
 Usage:
     python tools/scaling_evidence.py [--samples 2] [names...]
@@ -28,7 +29,8 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from tools.scale_stress import STRESS_DIR, build_stress_dir, run_child  # noqa: E402
+from tools import measure  # noqa: E402
+from tools.scale_stress import STRESS_DIR, build_stress_dir  # noqa: E402
 
 # PERF_r14's driver top-10. python_stream_source_totals uses its
 # @10x_rows SPECIAL row (its universe is synthetic; sf_dir unused).
@@ -56,18 +58,33 @@ def main() -> int:
     names = args.names or list(DEFAULT_NAMES)
 
     build_stress_dir()
-    out: dict = {
-        "_meta": {
+    dst = os.path.join(
+        REPO, "bench_baselines", "scaling_evidence_r15.json"
+    )
+    loadavg_start = list(os.getloadavg())
+    rows: dict = {}
+    prev_cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    for name in names:
+        row: dict = {}
+        for cpus in CPU_LEVELS:
+            os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
+            try:
+                row[f"c{cpus}"] = measure.fresh_jvm_samples(
+                    name, STRESS_DIR, args.samples)
+            finally:
+                if prev_cpus is None:
+                    os.environ.pop("SPARK_GRAFT_CPUS", None)
+                else:
+                    os.environ["SPARK_GRAFT_CPUS"] = prev_cpus
+        if row["c32"]["min"] and row["c8"]["min"]:
+            row["ratio_c8_over_c32"] = round(
+                row["c8"]["min"] / row["c32"]["min"], 2)
+        rows[name] = row
+        print(f"{name}: {row}", file=sys.stderr)
+        out = measure.artifact(rows, "fresh-jvm-per-sample", STRESS_DIR,
+                               args.samples, loadavg_start)
+        out["_meta"] = {
             "date": datetime.date.today().isoformat(),
-            "corpus": STRESS_DIR + " (10x replicated sf0.1, "
-                      "tools/scale_stress.py)",
-            "harness": (
-                "fresh JVM per sample (scale_stress --child: warm on "
-                "sf0.001, time the stress corpus), min over "
-                f"{args.samples} samples per (query, cpus); "
-                "SPARK_GRAFT_CPUS exported per child so the session "
-                "master AND shuffle partitions track it"
-            ),
             "cpu_levels": list(CPU_LEVELS),
             "purpose": (
                 "VERDICT r14 #7: data-dominated queries should show "
@@ -75,40 +92,9 @@ def main() -> int:
                 "dominating; streaming/iterative rows document their "
                 "floor instead"
             ),
-        },
-    }
-    dst = os.path.join(
-        REPO, "bench_baselines", "scaling_evidence_r15.json"
-    )
-    prev_cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    try:
-        for name in names:
-            row: dict = {}
-            for cpus in CPU_LEVELS:
-                os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
-                samples = []
-                loads = []
-                for _ in range(args.samples):
-                    loads.append(round(os.getloadavg()[0], 2))
-                    sec, err = run_child(name, STRESS_DIR, timeout=1800)
-                    if sec is not None:
-                        samples.append(sec)
-                    else:
-                        row[f"c{cpus}_err"] = err
-                row[f"c{cpus}"] = min(samples) if samples else None
-                row[f"c{cpus}_samples"] = samples
-                row[f"c{cpus}_loadavg1_before"] = loads
-            if row.get("c32") and row.get("c8"):
-                row["ratio_c8_over_c32"] = round(row["c8"] / row["c32"], 2)
-            out[name] = row
-            print(f"{name}: {row}", file=sys.stderr)
-            with open(dst, "w") as f:
-                json.dump(out, f, indent=1)
-    finally:
-        if prev_cpus is None:
-            os.environ.pop("SPARK_GRAFT_CPUS", None)
-        else:
-            os.environ["SPARK_GRAFT_CPUS"] = prev_cpus
+        }
+        with open(dst, "w") as f:
+            json.dump(out, f, indent=1)
     print(dst)
     return 0
 
